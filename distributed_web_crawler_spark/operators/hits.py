@@ -60,6 +60,7 @@ def hits(edges: DataFrame, n_iters: int = 2, checkpoint_every: int = 5) -> DataF
     previous aggregate), so the only data-sized move per step is the
     aggregate's own exchange. Values are unchanged — the iteration is
     integer-exact, so row order cannot change a bit."""
+    _check_iters(n_iters)
     p = edges.sparkSession.sparkContext.defaultParallelism
     raw = edges.select("src", "dst")
     edges_src = raw.repartition(p, "src").persist()
@@ -107,6 +108,7 @@ def hits_on_tables(
     the edge side never exchanges; numerically identical to hits() on the
     same graph (the iteration is integer-exact, so identical means
     bit-for-bit, not just within rounding)."""
+    _check_iters(n_iters)
     edges_src = spark.table(base_name + "_src")
     edges_dst = spark.table(base_name + "_dst")
     nodes = _node_set(edges_src).persist()
@@ -146,6 +148,13 @@ def iteration_outflow(edges: DataFrame, inflow: DataFrame) -> DataFrame:
     )
 
 
+def _check_iters(n_iters: int) -> None:
+    # checked before any persist: a raise after the caches materialize
+    # would pin them for the session
+    if n_iters < 1:
+        raise ValueError(f"hits requires n_iters >= 1, got {n_iters}")
+
+
 def _node_set(edges: DataFrame) -> DataFrame:
     return (
         edges.select(F.col("src").alias("url"))
@@ -164,10 +173,6 @@ def _iterate(
     """The ONE copy of the iteration loop + cache-lifetime rules, shared
     by the flat and dual-bucketed paths (the hand-rolled-copies failure
     class ROUND5 retired for bfs/pagerank applies here too)."""
-    if n_iters < 1:
-        # inflow/outflow would stay None and crash the final projection
-        # with a bare AttributeError; fail with the actual contract
-        raise ValueError(f"hits requires n_iters >= 1, got {n_iters}")
     st = IterationState(checkpoint_every)
     inflow = outflow = None
     for it in range(1, n_iters + 1):

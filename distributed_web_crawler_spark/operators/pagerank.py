@@ -67,6 +67,7 @@ def pagerank(
     # the only data-sized move per iteration is the dst aggregate's
     # exchange. w = 1.0/count(*) per src is the identical double the
     # window computed.
+    _check_iters(n_iters)
     p = edges.sparkSession.sparkContext.defaultParallelism
     e = edges.select("src", "dst").repartition(p, "src").persist()
     wframe = (
@@ -133,12 +134,14 @@ def iteration_contribs(edges: DataFrame, scores: DataFrame) -> DataFrame:
     )
 
 
-def _power_iterate(nodes, edges, wframe, n, n_iters, damping, checkpoint_every):
+def _check_iters(n_iters: int) -> None:
+    # checked before any persist: a raise after the caches materialize
+    # would pin them for the session
     if n_iters < 1:
-        # inflow would stay None and crash the final projection with a
-        # bare AttributeError; fail with the actual contract (same guard
-        # hits._iterate carries)
         raise ValueError(f"pagerank requires n_iters >= 1, got {n_iters}")
+
+
+def _power_iterate(nodes, edges, wframe, n, n_iters, damping, checkpoint_every):
     base = (1.0 - damping) / n
     st = IterationState(checkpoint_every)
     inflow = None
@@ -229,11 +232,13 @@ def pagerank_on_table(
 
     r9c: the iteration streams only the table's (src, dst) columns (the
     w column is lifted into the O(nodes) score side by an exchange-free
-    first(w)-per-src aggregate over the bucketed scan — every row of a
-    src carries the identical w the layout writer computed)."""
+    min(w)-per-src aggregate over the bucketed scan — every row of a
+    src carries the identical w the layout writer computed, and min does
+    not depend on row order)."""
+    _check_iters(n_iters)
     t = spark.table(name)
     edges = t.select("src", "dst")
-    wframe = t.groupBy("src").agg(F.first("w").alias("w")).persist()
+    wframe = t.groupBy("src").agg(F.min("w").alias("w")).persist()
     nodes = (
         t.select(F.col("src").alias("url"))
         .unionByName(t.select(F.col("dst").alias("url")))

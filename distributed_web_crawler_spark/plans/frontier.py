@@ -49,7 +49,6 @@ import json
 from ..catalog.tables import JobStateStore, _atomic_write
 from ..fixtures import corpus as C
 from ..functions import bloom as B
-from ..functions import cuckoo as CK
 from ..functions import urls as U
 from ..operators.extract import extract_links
 from ..sources.fetch import fetch_and_verify
@@ -85,16 +84,7 @@ def _pool_submit(spark: SparkSession, fn, *args, group: str | None = None):
         import threading
 
         sc = spark.sparkContext
-        # SPARK_GRAFT_SHARED_POOL=1 collapses every engine thread into one
-        # pool (FIFO-vs-FAIR A/B knob for the scaling campaign: fair
-        # time-slicing of verify ∥ extract ∥ write trades slot fairness
-        # for memory-bandwidth locality on a single box)
-        pool = (
-            "frontier-shared"
-            if os.environ.get("SPARK_GRAFT_SHARED_POOL")
-            else threading.current_thread().name
-        )
-        sc.setLocalProperty("spark.scheduler.pool", pool)
+        sc.setLocalProperty("spark.scheduler.pool", threading.current_thread().name)
         sc.setLocalProperty("spark.jobGroup.id", group)
         return fn(*args)
 
@@ -147,15 +137,6 @@ class EngineConfig:
     # path re-derives slices with the same grade (pure function of data).
     politeness_grade: Optional[str] = None
     bloom: B.BloomParams = field(default_factory=B.BloomParams)
-    # which approximate seen-filter backs the probe + fused write when
-    # use_bloom is on: "bloom" (OR-mergeable bits, no deletion) or
-    # "cuckoo" (functions/cuckoo.py — fingerprint table with exact
-    # deletion, the north rule's TTL/re-crawl arm). Both share the same
-    # blob layout, manifest inheritance, and no-false-negative contract;
-    # the exact re-check of positives is identical, so crawl results are
-    # filter-independent by construction (tests pin this).
-    seen_filter: str = "bloom"
-    cuckoo: CK.CuckooParams = field(default_factory=CK.CuckooParams)
     verify_payloads: bool = False  # per-row PSNR/phash/caption invariants
     # pipeline payload verification ACROSS rounds: round r's verify job
     # (decode + PSNR/phash/caption, the drain's longest phase) keeps running
@@ -221,48 +202,34 @@ class FrontierEngine:
     def store(self, job_id: str) -> JobStateStore:
         return self.store_backend(self.warehouse, job_id)
 
-    def _seen_filter(self):
-        """(module, params) of the configured approximate seen-filter —
-        bloom and cuckoo expose the same surface (load_blobs / contains /
-        add_hashes / write_blob), so the probe and the fused write are
-        filter-agnostic."""
-        if self.cfg.seen_filter == "cuckoo":
-            return CK, self.cfg.cuckoo
-        if self.cfg.seen_filter != "bloom":
-            raise ValueError(f"unknown seen_filter {self.cfg.seen_filter!r} (bloom|cuckoo)")
-        return B, self.cfg.bloom
-
     def _filter_meta(self) -> dict:
         """The blob-layout identity of this engine's seen-filter config,
         persisted in the seed commit and carried forward by commit_round.
         A job's blob files are only interpretable under the config that
-        wrote them: a bloom bit array loaded as a cuckoo table (reshape
-        (-1, 4)) — or either filter read under different size params, or
-        the parquet layout read under a different seen_buckets — yields
+        wrote them: a bit array read under different size params, or the
+        parquet layout read under a different seen_buckets, yields
         garbage probe verdicts whose FALSE side is trusted as
         definitely-new, i.e. silent duplicate crawling. use_bloom is part
         of the identity too: a resume with the filter off stops folding
         new hashes into the blobs, so re-enabling it later would probe
         filters missing whole rounds (stale-MISSING = false negatives)."""
-        meta = {
-            "kind": self.cfg.seen_filter,
+        return {
+            "kind": "bloom",
             "seen_buckets": self.cfg.seen_buckets,
             "use_bloom": self.cfg.use_bloom,
+            "n_bits": self.cfg.bloom.n_bits,
+            "n_hashes": self.cfg.bloom.n_hashes,
         }
-        if self.cfg.seen_filter == "cuckoo":
-            meta["n_buckets_log2"] = self.cfg.cuckoo.n_buckets_log2
-        else:
-            meta["n_bits"] = self.cfg.bloom.n_bits
-            meta["n_hashes"] = self.cfg.bloom.n_hashes
-        return meta
 
     def _check_filter_meta(self, info: dict) -> None:
         """Raise on resuming/mutating a job store under a seen-filter
         config other than the one that wrote it (ADVICE r7: a silent
-        bloom↔cuckoo swap reinterprets the blob bytes; false positives
-        are rescued by the exact re-check but false negatives duplicate
-        crawls with no error). Pre-r8 stores carry no metadata — accepted
-        as-is, the caller owns config continuity for those."""
+        filter swap reinterprets the blob bytes; false positives are
+        rescued by the exact re-check but false negatives duplicate crawls
+        with no error). That includes stores written by the retired cuckoo
+        filter, whose metadata names kind "cuckoo". Pre-r8 stores carry no
+        metadata — accepted as-is, the caller owns config continuity for
+        those."""
         stored = info.get("seen_filter")
         if stored is None:
             return
@@ -429,11 +396,11 @@ class FrontierEngine:
             return fresh, deduped
 
         blobs = {b: p for b, p in store.bloom_blobs().items()}
-        FM, params = self._seen_filter()
-        # exact re-check INPUTS for filter positives: a Bloom/cuckoo false
-        # positive must never lose a URL. The re-check runs INSIDE the
-        # probe task (numpy isin against the positive buckets' own seen
-        # url_hash column, loaded lazily per bucket from these roots) —
+        params = self.cfg.bloom
+        # exact re-check INPUTS for Bloom positives: a false positive must
+        # never lose a URL. The re-check runs INSIDE the probe task (numpy
+        # isin against the positive buckets' own seen url_hash column,
+        # loaded lazily per bucket from these roots) —
         # the r6 layout ran it as a separate anti-join whose subplan
         # executed lazily inside the fused WRITE job, adding a positives
         # exchange + a seen-scan stage to every round's writes_ms while
@@ -495,10 +462,10 @@ class FrontierEngine:
                 for bucket, grp in pdf.groupby("seen_bucket"):
                     filt = cache.get(bucket)
                     if filt is None:
-                        filt = FM.load_blobs(blobs.get(int(bucket)), params)
+                        filt = B.load_blobs(blobs.get(int(bucket)), params)
                         cache[bucket] = filt
                     hashes = grp["url_hash"].to_numpy()
-                    maybe = FM.contains(filt, hashes, params)
+                    maybe = B.contains(filt, hashes, params)
                     seen_flag = maybe
                     if maybe.any():
                         # exact membership for the positives only: False =
@@ -567,7 +534,7 @@ class FrontierEngine:
         whichever finished last won the attribute and the bench's
         write_conv/pq/bloom_ms phases could report the wrong job's numbers."""
         blobs = store.bloom_blobs() if (self.cfg.use_bloom and bloom_round is not None) else None
-        FM, params = self._seen_filter()
+        params = self.cfg.bloom
         update_blooms = blobs is not None
         r = bloom_round
         chunks = 1
@@ -625,9 +592,9 @@ class FrontierEngine:
             os.replace(tmp, path)
             t_pq = _time.monotonic()
             if update_blooms:
-                filt = FM.load_blobs(blobs.get(bucket), params)
-                FM.add_hashes(filt, pdf["url_hash"].to_numpy(), params)
-                FM.write_blob(store.bloom_blob_path(r, bucket, chunk), filt)
+                filt = B.load_blobs(blobs.get(bucket), params)
+                B.add_hashes(filt, pdf["url_hash"].to_numpy(), params)
+                B.write_blob(store.bloom_blob_path(r, bucket, chunk), filt)
             t_bloom = _time.monotonic()
             # per-task phase timers ride back on the stats row (no extra job):
             # conv = pandas→Arrow, pq = parquet write, bloom = blob fold+write.
@@ -904,46 +871,6 @@ class FrontierEngine:
         return {"compacted": flipped, "upto": last, "n_components": len(paths)}
 
     # ------------------------------------------------------------ unsee / recrawl
-    def _rebuild_filter_blobs(self, store: JobStateStore, r: int, buckets: List[int], tomb: DataFrame) -> None:
-        """Rebuild the touched buckets' cuckoo blobs from the post-delete
-        live seen set (stage into round r; the manifest flip at commit
-        publishes them, vacuum sweeps the superseded generations). One
-        task per bucket inserts that bucket's live hashes into a fresh
-        filter — the result contains every live hash by construction, so
-        no (bucket, fingerprint) collision between a deleted and a
-        surviving key can leave a false negative the way an in-place
-        delete could (functions/cuckoo.py delete_hashes contract).
-
-        Cost profile: O(live bucket share) per touched bucket — hashes
-        only (8 B/row; a 10^10 deployment's ~1M-row shard is an 8 MB
-        task). Same maintenance-op class as compact_seen, and strictly
-        bounded by the buckets the unsee batch actually touched. A
-        touched bucket whose live set became EMPTY writes no file;
-        load_blobs reads a missing path as the empty filter, which is the
-        correct verdict for an empty bucket."""
-        FM, params = self._seen_filter()
-        live = self._seen_df(store, buckets=buckets)
-        if live is None:
-            return
-        # round r's tombstones are staged but not committed, so the live
-        # view still shows the doomed rows; subtract them the same way the
-        # committed suppression will (url_hash equality, broadcast —
-        # unsee batches are recrawl-list sized)
-        live = live.join(F.broadcast(tomb.select("url_hash")), "url_hash", "left_anti")
-
-        def rebuild(key, pdf):
-            import pandas as pd
-
-            bucket = int(key[0])
-            filt = FM.empty_filter(params)
-            FM.add_hashes(filt, pdf["url_hash"].to_numpy(), params)
-            FM.write_blob(store.bloom_blob_path(r, bucket, 0), filt)
-            return pd.DataFrame({"bucket": [bucket], "n": [len(pdf)]})
-
-        live.select("seen_bucket", "url_hash").groupBy("seen_bucket").applyInPandas(
-            rebuild, schema="bucket int, n long"
-        ).collect()
-
     def unsee_urls(self, job_id: str, urls, reseed: bool = False) -> dict:
         """Remove URLs from the job's seen set — the re-crawl primitive.
         The reference's only forget path is Redis cache-TTL expiry
@@ -956,14 +883,9 @@ class FrontierEngine:
         vacuumed once covered. No seen component is rewritten.
 
         Candidates are gated on the EXACT seen table (inner join), never
-        trusted from user input. With the cuckoo filter the touched
-        buckets' blobs are REBUILT from the surviving live rows
-        (_rebuild_filter_blobs — an in-place delete_hashes would
-        false-negative a live key sharing (bucket, fingerprint) with a
-        deleted one, functions/cuckoo.py delete_hashes contract); with
-        bloom (no deletion) the stale positive bits stay and the probe's
-        exact re-check against the suppressed seen view rescues the URL
-        as new — correct either way, cuckoo just keeps the filter tight.
+        trusted from user input. The Bloom blobs are left as they are: an
+        unseen URL's stale positive bits stay, and the probe's exact
+        re-check against the suppressed seen view rescues the URL as new.
 
         ``reseed=True`` re-enters the unseen URLs in the SAME committed
         round, at their ORIGINAL discovery depths (the tombstone rows carry
@@ -1017,11 +939,11 @@ class FrontierEngine:
         list (recrawl a whole host, an entire depth, a URL prefix). The
         predicate (SQL string or Column over url/url_hash/depth/
         seen_bucket) is evaluated over the suppressed seen view, so the
-        candidates are exact seen rows by construction (the cuckoo delete
-        contract holds with no gate join); everything downstream — the
-        tombstone round, filter-blob handling, atomic reseed at original
-        depths — is shared with unsee_urls. One full seen scan, one pass:
-        a maintenance-op cost profile, same as compact_seen."""
+        candidates are exact seen rows by construction (no gate join is
+        needed); everything downstream — the tombstone round, atomic
+        reseed at original depths — is shared with unsee_urls. One full
+        seen scan, one pass: a maintenance-op cost profile, same as
+        compact_seen."""
         store = self.store(job_id)
         last = store.last_committed()
         if last is None:
@@ -1043,30 +965,16 @@ class FrontierEngine:
             tomb = tomb.persist()  # shared by the tombstone and reseed writes
         prev = store.read_commit(r - 1)
         self._check_filter_meta(prev)
-        # filter blob plan: without reseed, the cuckoo arm REBUILDS the
-        # touched buckets' blobs from the post-delete live seen set (bloom
-        # cannot delete — its stale bits are rescued by the exact re-check).
-        # An in-place delete_hashes would be wrong here: inserts are
-        # set-semantic, so two distinct live hashes sharing (bucket, fp) —
-        # guaranteed to occur at 10^10 scale with 16-bit fingerprints —
-        # own ONE stored copy, and deleting either key would false-negative
-        # the other (ADVICE r7). Rebuilding from the exact live rows makes
-        # the filter ⊇ live by construction. WITH reseed, delete∘re-add is
-        # the identity on these hashes, so the tombstone write skips blob
-        # work entirely and the reseed write re-adds into the previous
-        # blobs (set semantics make it a no-op for hashes already present).
-        do_rebuild = (
-            not reseed and self.cfg.seen_filter == "cuckoo" and self.cfg.use_bloom
-        )
+        # the tombstone write leaves the Bloom blobs alone (bits cannot be
+        # deleted; stale positives are rescued by the exact re-check), and
+        # the reseed write re-adds into the previous blobs, a no-op for
+        # bits already set
         touched: List[int] = []
         try:
             stats, _ = self._write_bucketed(
                 store, store.tombstones_path(r), tomb, bloom_round=None,
             )
             n = sum(s[1] for s in stats)
-            if do_rebuild and n > 0:
-                touched = sorted({s[0] for s in stats})
-                self._rebuild_filter_blobs(store, r, touched, tomb)
             # replay the crawl cursor unchanged: the loop's depth/sub-round
             # arithmetic sees the same state it would without this round
             manifest = list(prev["frontier_manifest"])
@@ -1084,7 +992,7 @@ class FrontierEngine:
                 rs_stats, _ = self._write_bucketed(
                     store, store.new_path(r), rs, bloom_round=r, approx_rows=n
                 )
-                touched = sorted(set(touched) | {s[0] for s in rs_stats})
+                touched = sorted({s[0] for s in rs_stats})
                 fr_stats, _ = self._write_bucketed(
                     store, store.deferred_path(r),
                     rs.withColumn("due", F.col("depth")), None,

@@ -87,5 +87,8 @@ def test_iteration_scores_absent_sources_at_base(spark):
     assert abs(out["b"] - (0.22 + 0.05)) < 1e-15
     assert set(out) == {"b"}
 
+    # rejected before any cache is persisted, so nothing stays pinned
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
     with pytest.raises(ValueError, match="n_iters"):
         pagerank(edges, n_iters=0)
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) == before

@@ -57,8 +57,11 @@ def test_hits_rejects_zero_iters(spark):
     from distributed_web_crawler_spark.operators.hits import hits
 
     edges = spark.createDataFrame([("a", "b")], "src string, dst string")
+    # rejected before any cache is persisted, so nothing stays pinned
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
     with pytest.raises(ValueError, match="n_iters"):
         hits(edges, n_iters=0)
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) == before
 
 
 def test_kmeans_rejects_zero_iters(spark):
