@@ -50,8 +50,14 @@ def _pick_victims(rows, k=3):
     return out[:k]
 
 
-def test_unsee_suppresses_everywhere(spark, corpus_1k, tmp_path):
-    eng, spec, seed_i = _engine(spark, corpus_1k, tmp_path)
+# `bloom` probes through the Bloom blobs plus the exact re-check; `exact`
+# (use_bloom=False) probes the seen table alone.
+SEEN_PROBES = [pytest.param(True, id="bloom"), pytest.param(False, id="exact")]
+
+
+@pytest.mark.parametrize("use_bloom", SEEN_PROBES)
+def test_unsee_suppresses_everywhere(spark, corpus_1k, tmp_path, use_bloom):
+    eng, spec, seed_i = _engine(spark, corpus_1k, tmp_path, use_bloom=use_bloom)
     eng.run_job("u1", C.url_of(seed_i, spec), 3)
     before = _seen_rows(eng, "u1")
     victims = _pick_victims(before)
@@ -70,7 +76,7 @@ def test_unsee_suppresses_everywhere(spark, corpus_1k, tmp_path):
 
     # the PROBE view agrees with the DataFrame view: unseen URLs come back
     # fresh, still-seen URLs stay filtered — this exercises the numpy
-    # bucket_seen suppression and the Bloom stale-positive rescue
+    # bucket_seen suppression and, with Bloom on, the stale-positive rescue
     store = eng.store("u1")
     still = [u for _h, u, _d in after][:3]
     keyed = eng._with_keys(
@@ -93,8 +99,9 @@ def test_unsee_suppresses_everywhere(spark, corpus_1k, tmp_path):
     assert "SortMergeJoin" not in plan, plan
 
 
-def test_unsee_reseed_recrawls_at_original_depths(spark, corpus_1k, tmp_path):
-    eng, spec, seed_i = _engine(spark, corpus_1k, tmp_path)
+@pytest.mark.parametrize("use_bloom", SEEN_PROBES)
+def test_unsee_reseed_recrawls_at_original_depths(spark, corpus_1k, tmp_path, use_bloom):
+    eng, spec, seed_i = _engine(spark, corpus_1k, tmp_path, use_bloom=use_bloom)
     seed = C.url_of(seed_i, spec)
     eng.run_job("u3", seed, 3)
     before = _seen_rows(eng, "u3")

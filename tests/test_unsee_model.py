@@ -46,7 +46,9 @@ def _engine_state(eng, job):
     return {r["url"]: r["depth"] for r in eng.seen_df(job).collect()}
 
 
-@pytest.mark.parametrize("seed", [7, 23])
+@pytest.mark.parametrize(
+    "seed", [pytest.param(7, id="7-bloom"), pytest.param(23, id="23-bloom")]
+)
 def test_unsee_sequences_match_model(spark, corpus_1k, tmp_path, seed):
     spec, path = corpus_1k
     eng = FrontierEngine(
