@@ -66,14 +66,13 @@ def hits(edges: DataFrame, n_iters: int = 2, checkpoint_every: int = 5) -> DataF
     edges_src = raw.repartition(p, "src").persist()
     edges_dst = raw.repartition(p, "dst").persist()
     nodes = _node_set(edges_src).persist()
-    if nodes.count() == 0:  # materializes the src cache + nodes
+    try:
+        if nodes.count() == 0:  # materializes the src cache + nodes
+            return edges.sparkSession.createDataFrame([], "url string, hub double, auth double")
+        return _iterate(nodes, edges_src, edges_dst, n_iters, checkpoint_every)
+    finally:
         for f in (edges_src, edges_dst, nodes):
             f.unpersist()
-        return edges.sparkSession.createDataFrame([], "url string, hub double, auth double")
-    out = _iterate(nodes, edges_src, edges_dst, n_iters, checkpoint_every)
-    for f in (edges_src, edges_dst, nodes):
-        f.unpersist()
-    return out
 
 
 def write_edges_dual_bucketed(
@@ -112,12 +111,12 @@ def hits_on_tables(
     edges_src = spark.table(base_name + "_src")
     edges_dst = spark.table(base_name + "_dst")
     nodes = _node_set(edges_src).persist()
-    if nodes.count() == 0:
+    try:
+        if nodes.count() == 0:
+            return spark.createDataFrame([], "url string, hub double, auth double")
+        return _iterate(nodes, edges_src, edges_dst, n_iters, checkpoint_every)
+    finally:
         nodes.unpersist()
-        return spark.createDataFrame([], "url string, hub double, auth double")
-    out = _iterate(nodes, edges_src, edges_dst, n_iters, checkpoint_every)
-    nodes.unpersist()
-    return out
 
 
 def iteration_inflow(edges: DataFrame, outflow: DataFrame) -> DataFrame:

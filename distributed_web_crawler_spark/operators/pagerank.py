@@ -79,16 +79,14 @@ def pagerank(
         .distinct()
         .persist()
     )
-    n = nodes.count()  # materializes the edge cache + nodes
-    if n == 0:
+    try:
+        n = nodes.count()  # materializes the edge cache + nodes
+        if n == 0:
+            return edges.sparkSession.createDataFrame([], "url string, rank double")
+        return _power_iterate(nodes, e, wframe, n, n_iters, damping, checkpoint_every)
+    finally:
         for f in (nodes, wframe, e):
             f.unpersist()
-        return edges.sparkSession.createDataFrame([], "url string, rank double")
-
-    out = _power_iterate(nodes, e, wframe, n, n_iters, damping, checkpoint_every)
-    for f in (nodes, wframe, e):
-        f.unpersist()
-    return out
 
 
 def iteration_scores(
@@ -245,12 +243,11 @@ def pagerank_on_table(
         .distinct()
         .persist()
     )
-    n = nodes.count()
-    if n == 0:
+    try:
+        n = nodes.count()
+        if n == 0:
+            return spark.createDataFrame([], "url string, rank double")
+        return _power_iterate(nodes, edges, wframe, n, n_iters, damping, checkpoint_every)
+    finally:
         nodes.unpersist()
         wframe.unpersist()
-        return spark.createDataFrame([], "url string, rank double")
-    out = _power_iterate(nodes, edges, wframe, n, n_iters, damping, checkpoint_every)
-    nodes.unpersist()
-    wframe.unpersist()
-    return out

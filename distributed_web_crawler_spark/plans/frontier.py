@@ -39,8 +39,8 @@ from __future__ import annotations
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
-from typing import List, Optional
+from dataclasses import InitVar, dataclass, field
+from typing import List, NamedTuple, Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -59,7 +59,8 @@ from ..oracle.crawler import PolitenessPolicy, RobotsPolicy
 FRONTIER_SCHEMA = "url string, host string, url_hash bigint, seen_bucket int, depth int"
 
 # driver-side pool for concurrent Spark actions within a round (independent
-# job DAGs: payload verify ∥ extraction pipeline; seen/bloom/frontier writes)
+# job DAGs: payload verify ∥ discover and writes; deferred-slice write ∥
+# new-URL write)
 _POOL = ThreadPoolExecutor(max_workers=4, thread_name_prefix="frontier-io")
 
 
@@ -68,8 +69,8 @@ def _pool_submit(spark: SparkSession, fn, *args, group: str | None = None):
     pool. spark.scheduler.mode=FAIR (session.py) only arbitrates BETWEEN
     pools; with no allocation file every job lands in the single default
     pool, whose internal mode is FIFO — i.e. FAIR-with-one-pool schedules
-    exactly like FIFO and the long verify job still starves the short write
-    job. Tagging each pool thread with its own spark.scheduler.pool local
+    exactly like FIFO and a round's long verify job still starves its short
+    write jobs. Tagging each pool thread with its own spark.scheduler.pool local
     property puts concurrent jobs in DISTINCT auto-created pools (weight 1,
     minShare 0), which the FAIR root genuinely round-robins. Local
     properties are per-Python-thread under PySpark's pinned-thread mode and
@@ -108,9 +109,6 @@ class EngineConfig:
     # an unbounded in-memory frame — the guard holds even when an operator
     # leaves seen_buckets at a value too small for their crawl
     max_group_rows: int = 2_000_000
-    # count the per-round candidate set (extra materialization of the
-    # extract+dedup pipeline) — rich metrics for tests, off for benchmarks
-    detailed_metrics: bool = True
     # merge per-round seen deltas into one bucketed table whenever the
     # component count exceeds this (0/None disables). Keeps the per-round
     # seen file listing O(1) in crawl age — without it a thousand-round
@@ -138,17 +136,11 @@ class EngineConfig:
     politeness_grade: Optional[str] = None
     bloom: B.BloomParams = field(default_factory=B.BloomParams)
     verify_payloads: bool = False  # per-row PSNR/phash/caption invariants
-    # pipeline payload verification ACROSS rounds: round r's verify job
-    # (decode + PSNR/phash/caption, the drain's longest phase) keeps running
-    # while round r+1 admits/extracts/writes, and is awaited one round
-    # later — per-round wall becomes max(verify, rest) instead of their
-    # sum. Every admitted row is still verified; stats land in the round
-    # dir's verify.json AFTER the round's commit instead of inside it, so
-    # a driver killed between a commit and its verify finalize leaves that
-    # round's stats file absent (the rows themselves are committed and the
-    # resume path is unchanged) — the synchronous default keeps stats
-    # inside commit.json with no such window.
-    pipeline_verify: bool = False
+    # accepted and discarded: older callers (bench.py among them) still
+    # pass these; verify always runs inside its round, and every round
+    # metric is always counted
+    detailed_metrics: InitVar[bool] = True
+    pipeline_verify: InitVar[bool] = False
 
 
 @dataclass
@@ -162,6 +154,27 @@ class RoundStats:
     n_blocked: int
     n_pending_after: int
     wall_ms: int
+
+
+class _Admission(NamedTuple):
+    """What a round's admission stage hands its later stages."""
+
+    depth: int
+    sub_round: int
+    manifest: List[list]  # the previous commit's pending-frontier manifest
+    consumed: List[list]  # the manifest entries this round drains
+    frame: DataFrame  # the admitted rows, persisted
+    n: int
+    deferred: Optional[DataFrame]  # rows politeness scheduled for later sub-rounds
+    n_deferred: int
+
+
+class _Writes(NamedTuple):
+    """What a round's write stage staged in its round dir."""
+
+    touched: List[int]  # seen buckets whose Bloom blobs the round rewrote
+    n_new: int
+    slices: List[list]  # manifest entries of the deferred politeness slices
 
 
 class FrontierEngine:
@@ -178,18 +191,6 @@ class FrontierEngine:
         self.corpus_path = corpus_path
         self.spec = spec
         self.cfg = cfg or EngineConfig()
-        # at most ONE in-flight pipelined verify: (round, future, persisted
-        # frames kept alive until the verify job has consumed them)
-        self._verify_inflight: Optional[tuple] = None
-        # r9 (r8 verdict Next #2, "hide the final round's verify tail"):
-        # at most one EARLY-submitted verify for a FUTURE round —
-        # (store, round, future). Round r, after committing the last
-        # depth's frontier, pre-submits round r+1's payload verify (the
-        # final depth does no extraction, so without this the job's
-        # largest verify ran with nothing to overlap but job-end
-        # bookkeeping). Round r+1 adopts the future at its submit point
-        # when the store/round/sub-round match exactly.
-        self._early_verify: Optional[tuple] = None
 
     # ------------------------------------------------------------ helpers
     # catalog seam (catalog/backend.py CatalogBackend): every store the
@@ -675,75 +676,10 @@ class FrontierEngine:
             phases["fcompact_ms"] = round((time.monotonic() - t0) * 1000)
         return out
 
-    # ------------------------------------------------------------ pipelined verify
-    def _finalize_verify(self, store: JobStateStore) -> None:
-        """Await the in-flight pipelined verify (if any), release its
-        persisted frames, and write its stats as ``verify.json`` in the
-        (already committed) round dir. An inflight entry belonging to a
-        different job store (engine reuse after a mid-crawl abort) is
-        drained and discarded, never finalized into this store."""
-        if self._verify_inflight is None:
-            return
-        own_store, r0, fut, frames = self._verify_inflight
-        self._verify_inflight = None
-        if own_store.dir != store.dir:
-            # stale entry from a DIFFERENT job whose run_job aborted
-            # mid-round (a reused engine): it must not be finalized into
-            # THIS job's round dir. Drain + release, then — the round it
-            # belongs to is already committed — record a SUCCESSFUL result
-            # as verify.json in its OWN store (losing it would make
-            # payload_stats() silently report the round as never verified);
-            # a failure becomes a warning attributed to its own store
-            # rather than an exception raised into an unrelated job.
-            stale_stats = None
-            try:
-                stale_stats = fut.result()
-            except Exception as e:  # pragma: no cover - needs a failing stale verify
-                import warnings
-
-                warnings.warn(
-                    f"discarded pipelined verify for aborted job at "
-                    f"{own_store.dir!r} round {r0}: {e!r}"
-                )
-            finally:
-                for df_ in frames:
-                    df_.unpersist()
-            if stale_stats and os.path.isdir(own_store.round_dir(r0)):
-                _atomic_write(
-                    os.path.join(own_store.round_dir(r0), "verify.json"),
-                    json.dumps(
-                        {k: (float(v) if v is not None else None) for k, v in stale_stats.items()}
-                    ).encode(),
-                )
-            return
-        try:
-            stats = fut.result()
-        except Exception as e:
-            # round r0 is ALREADY COMMITTED (the pipelined trade, see
-            # EngineConfig.pipeline_verify): surface the failure attributed
-            # to ITS round, not the round whose finalize happened to await
-            # it — the frontier rows are durable and correct (verification
-            # checks payload invariants, it does not gate admission), but
-            # the round must be re-verified before its payloads are trusted
-            raise RuntimeError(
-                f"pipelined payload verification FAILED for already-committed "
-                f"round {r0}: its rows are durable but unverified — re-run "
-                f"verification for round {r0} before trusting its payloads"
-            ) from e
-        finally:
-            for df_ in frames:
-                df_.unpersist()
-        if stats:
-            _atomic_write(
-                os.path.join(store.round_dir(r0), "verify.json"),
-                json.dumps(
-                    {k: (float(v) if v is not None else None) for k, v in stats.items()}
-                ).encode(),
-            )
-
+    # ------------------------------------------------------------ payload verify
     def payload_stats(self, job_id: str) -> dict:
-        """round -> payload-verification stats, from commit.json (synchronous
-        mode) or the pipelined mode's verify.json sidecar."""
+        """round -> payload-verification stats, from commit.json or, for a
+        round recovered by reverify_round, its verify.json sidecar."""
         store = self.store(job_id)
         out: dict = {}
         for r in store.committed_rounds():
@@ -759,11 +695,12 @@ class FrontierEngine:
 
     def unverified_rounds(self, job_id: str) -> List[int]:
         """Committed rounds that ADMITTED pages but carry no payload-verify
-        stats. In pipelined mode, a driver killed between a round's commit
-        and its verify finalize leaves exactly this signature — an absent
-        verify.json sidecar — so the round's rows are durable but its
-        payloads unverified (r4 VERDICT Next #8). Only meaningful when the
-        job ran with verify_payloads."""
+        stats. The engine verifies inside the round and commits the stats
+        with it, so only a store written by an earlier engine that verified
+        across rounds can show this: a driver killed between a round's
+        commit and its verify finalize left the round's rows durable but
+        its payloads unverified. Only meaningful when the job ran with
+        verify_payloads."""
         store = self.store(job_id)
         verified = self.payload_stats(job_id)
         return [
@@ -772,9 +709,16 @@ class FrontierEngine:
             if store.read_commit(r).get("n_admitted", 0) > 0 and r not in verified
         ]
 
-    def _verify_stats(self, admitted_keyed: DataFrame) -> dict:
+    def _verify_stats(self, admitted: DataFrame) -> dict:
+        """Fetch + decode + verify every admitted row; the aggregate
+        invariant counts. Builds its plan in the calling thread (fetch_join
+        runs a bucket-pruning collect), so a pool submit keeps that off the
+        round's own thread too."""
+        keyed = admitted.withColumn("image_id", U.image_id_of(F.col("url"))).withColumn(
+            "corpus_bucket", F.pmod(U.page_index(F.col("url")), F.lit(C.N_BUCKETS)).cast("int")
+        )
         return (
-            fetch_and_verify(self.spark, self.corpus_path, admitted_keyed, self.spec)
+            fetch_and_verify(self.spark, self.corpus_path, keyed, self.spec)
             .agg(
                 F.count("*").alias("n"),
                 F.sum(F.col("pixels_ok").cast("int")).alias("n_pixels_ok"),
@@ -787,43 +731,23 @@ class FrontierEngine:
         )
 
     def reverify_round(self, job_id: str, r: int) -> dict:
-        """Re-run payload verification for an already-committed round whose
-        verify died pre-finalize (see unverified_rounds) and write its
-        missing verify.json sidecar. The admitted set is re-derived from
-        the PREVIOUS commit's frontier manifest — sub-round 0 re-ranks the
-        pending components (the politeness schedule is a pure function of
-        the data, so the slice is reproduced exactly), later sub-rounds
-        read their stored due-slices — so this works as long as vacuum has
-        not swept the consumed components; after that the inputs are gone
-        and the read raises, which is the honest answer (re-verify before
-        maintenance, or re-crawl the round)."""
+        """Re-run payload verification for an already-committed round that
+        carries no stats (see unverified_rounds: a store written by an
+        earlier engine that verified across rounds) and write its missing
+        verify.json sidecar. The admitted set is re-derived by the round's
+        own admission stage from the PREVIOUS commit's frontier manifest
+        (the politeness schedule is a pure function of the data, so the
+        slice is reproduced exactly), so this works as long as vacuum has
+        not swept the consumed components; after that the read raises,
+        which is the honest answer (re-verify before maintenance, or
+        re-crawl the round)."""
         store = self.store(job_id)
-        prev = store.read_commit(r - 1)
-        manifest = prev["frontier_manifest"]
-        d = min(e[1] for e in manifest)
-        sub = prev["sub_round"] + 1 if prev["depth"] == d else 0
-        entries_d = [e for e in manifest if e[1] == d]
-        if sub == 0:
-            pending = self._read_components(
-                [os.path.join(store.dir, e[0]) for e in entries_d]
-            )
-            admitted = (
-                pending
-                if self.cfg.politeness is None
-                else schedule(pending, self.cfg.politeness, grade=self._grade_col())[0]
-            )
-        else:
-            consumed = [e for e in entries_d if len(e) > 3 and e[3] == sub]
-            admitted = self._read_components(
-                [os.path.join(store.dir, e[0]) for e in consumed]
-            )
-        admitted_keyed = admitted.withColumn(
-            "image_id", U.image_id_of(F.col("url"))
-        ).withColumn(
-            "corpus_bucket",
-            F.pmod(U.page_index(F.col("url")), F.lit(C.N_BUCKETS)).cast("int"),
-        )
-        stats = self._verify_stats(admitted_keyed)
+        persisted: List[DataFrame] = []
+        try:
+            stats = self._verify_stats(self._admit(store, r, persisted).frame)
+        finally:
+            for df_ in persisted:
+                df_.unpersist()
         _atomic_write(
             os.path.join(store.round_dir(r), "verify.json"),
             json.dumps(
@@ -1068,13 +992,6 @@ class FrontierEngine:
 
         while not info.get("done"):
             if max_rounds is not None and rounds_done >= max_rounds:
-                self._finalize_verify(store)  # drain the pipelined verify
-                # a pre-submitted NEXT-round verify (if any) is deliberately
-                # left in flight: a resume on this engine adopts it (same
-                # store, same round number); an engine reused for another
-                # job cancels+drains it at that job's submit point. It reads
-                # only committed files and persists nothing, so an owner
-                # that never resumes leaks no cached frames.
                 return {"job_id": job_id, "done": False, "last_round": last}
             r = last + 1
             t0 = time.monotonic()
@@ -1090,383 +1007,265 @@ class FrontierEngine:
             if on_round is not None:
                 on_round(stats)
 
-        # the LAST round's pipelined verify has no next round to hide
-        # behind — overlap it with the job-end seen count instead (both
-        # are independent job DAGs; FAIR shares slots)
-        count_future = _pool_submit(self.spark, lambda: self.seen_df(job_id).count())
-        try:
-            self._finalize_verify(store)
-        except BaseException:
-            # a verify failure must not orphan the in-flight count job:
-            # drain it (its own outcome is moot once verify failed)
-            try:
-                count_future.result()
-            except Exception:
-                pass
-            raise
         return {
             "job_id": job_id,
             "done": True,
             "last_round": last,
-            "n_seen": count_future.result(),
+            "n_seen": self.seen_df(job_id).count(),
         }
 
     def _run_round(self, store: JobStateStore, r: int, depth_limit: int) -> RoundStats:
+        """One round as a chain of stages: admit → verify submit →
+        discover → stage writes → commit. Payload verify runs in a pool
+        thread beside discover and the writes and is awaited before the
+        commit, so its stats land in the round's commit.json. The phase
+        marks (commit.json "phases") are driver wall time between stage
+        boundaries."""
         phases: dict = {}
-
-        def _mark(key, t0):
-            phases[key] = round((time.monotonic() - t0) * 1000)
-            return time.monotonic()
-        payload_future = None
-        deferred_future = None
         persisted: List[DataFrame] = []
+        futures: list = []  # this round's in-flight pool actions
+        t = time.monotonic()
+
+        def mark(key: str) -> None:
+            nonlocal t
+            now = time.monotonic()
+            phases[key] = round((now - t) * 1000)
+            t = now
+
         try:
-
-            t = time.monotonic()
-            prev = store.read_commit(r - 1)
-            # the pending frontier is a MANIFEST of committed file-sets
-            # ([relpath, depth, n_rows, due_sub]); the depth cursor, the
-            # no-politeness admitted count, AND every later sub-round's admitted
-            # count are manifest arithmetic — zero Spark jobs — and only the
-            # file-sets the round actually drains are ever opened
-            manifest = prev.get("frontier_manifest")
-            if manifest is None:
-                raise ValueError(
-                    f"job store at {store.dir!r} was committed by a pre-manifest layout "
-                    "(no frontier_manifest in commit.json); rerun the job in a fresh "
-                    "warehouse — old stores are not migrated"
+            adm = self._admit(store, r, persisted)
+            mark("admit_ms")
+            verify = None
+            if self.cfg.verify_payloads and adm.n > 0:
+                # shares only the cached admitted frame with discover and
+                # the writes: two independent job DAGs
+                verify = _pool_submit(
+                    self.spark, self._verify_stats, adm.frame, group=f"verify:{store.dir}:r{r}"
                 )
-            d = min(e[1] for e in manifest)
-            sub = prev["sub_round"] + 1 if prev["depth"] == d else 0
-            entries_d = [e for e in manifest if e[1] == d]
-            n_pending_d = sum(e[2] for e in entries_d)
-
-            # ---- admission. Sub-round 0 ranks the depth's ENTIRE pending set
-            # once and writes each future sub-round's slice ONCE, partitioned by
-            # its computed due sub-round (`ceil(rn/budget)-1`); every later
-            # sub-round admits its slice purely BY MANIFEST REFERENCE — no
-            # politeness window re-run, no deferred-set rewrite. (The old loop
-            # re-ranked and REWROTE the whole remainder every sub-round: a
-            # mega-host with M pending and budget k wrote O(M²/k) rows; this
-            # writes O(M) total.)
-            deferred_sched = None  # rows scheduled for future sub-rounds (sub 0 only)
-            n_deferred = 0
-            if sub == 0:
-                consumed = entries_d
-                pending = self._read_components(
-                    [os.path.join(store.dir, e[0]) for e in consumed]
-                )
-                if self.cfg.politeness is None:
-                    admitted = pending
-                    persisted = [admitted.persist()]
-                    n_admitted = n_pending_d
-                else:
-                    # persisted `ranked` ancestor: the host-window shuffle runs
-                    # ONCE, shared by the admitted count and the deferred write
-                    persisted = []
-                    admitted, deferred_sched = schedule(
-                        pending, self.cfg.politeness, persisted, grade=self._grade_col()
-                    )
-                    persisted.append(admitted.persist())
-                    n_admitted = admitted.count()
-                    n_deferred = n_pending_d - n_admitted
-            else:
-                consumed = [e for e in entries_d if len(e) > 3 and e[3] == sub]
-                if not consumed:
-                    raise ValueError(
-                        f"no frontier slice due at depth {d} sub-round {sub}: "
-                        f"schedule slices must be contiguous ({entries_d}). A "
-                        "3-element entry here means the store was committed by "
-                        "the pre-due-slice layout — rerun the job in a fresh "
-                        "warehouse (old stores are not migrated)."
-                    )
-                admitted = self._read_components(
-                    [os.path.join(store.dir, e[0]) for e in consumed]
-                )
-                persisted = [admitted.persist()]
-                n_admitted = sum(e[2] for e in consumed)
-            t = _mark("admit_ms", t)
-
-            # ---- fetch: bucket-pruned corpus scan ⋈ broadcast(admitted)
-            admitted_keyed = admitted.withColumn("image_id", U.image_id_of(F.col("url"))).withColumn(
-                "corpus_bucket", F.pmod(U.page_index(F.col("url")), F.lit(C.N_BUCKETS)).cast("int")
-            )
-            payload_future = None
-            early = self._early_verify
-            if early is not None and (
-                early[0].dir != store.dir or early[1] != r
-            ):
-                # stale early verify (engine reuse / abort between rounds):
-                # CANCEL its Spark jobs first — this round must not block
-                # synchronously behind a full verify of another job — then
-                # drain best-effort and discard; never adopt across jobs
-                self._early_verify = None
-                try:
-                    self.spark.sparkContext.cancelJobGroup(
-                        f"verify:{early[0].dir}:r{early[1]}"
-                    )
-                except Exception:  # pragma: no cover - cancellation is best-effort
-                    pass
-                try:
-                    early[2].result()
-                except Exception:  # pragma: no cover - stale drain is best-effort
-                    pass
-                early = None
-            if self.cfg.verify_payloads and n_admitted > 0 and early is not None and sub == 0 and self.cfg.politeness is None:
-                # adopt the verify pre-submitted at the END of the previous
-                # round over the identical committed row set (see the
-                # early-submit block below) — it has been running through
-                # this round's admit already
-                self._early_verify = None
-                payload_future = early[2]
-            elif self.cfg.verify_payloads and n_admitted > 0:
-                # run the payload fetch+decode CONCURRENTLY with the extraction/
-                # dedup pipeline below — they share only the cached `admitted`
-                # (Spark actions are thread-safe; two independent job DAGs).
-                # Construction happens inside the thread too: fetch_join's
-                # bucket-pruning collect would otherwise block this thread.
-                def _verify():
-                    t0 = time.monotonic()
-                    stats = self._verify_stats(admitted_keyed)
-                    # the verify job's own wall: with pipeline_verify the phase
-                    # table only shows residual WAIT, so this is the one place
-                    # an operator can still read what verification actually
-                    # cost (slot-shared elapsed, not exclusive CPU). Sync mode
-                    # keeps the stats deterministic — fetch_verify_wait_ms
-                    # already carries the timing there.
-                    if self.cfg.pipeline_verify:
-                        stats["verify_wall_ms"] = round((time.monotonic() - t0) * 1000)
-                    return stats
-
-                payload_future = _pool_submit(
-                    self.spark, _verify, group=f"verify:{store.dir}:r{r}"
-                )
-            t = _mark("fetch_submit_ms", t)
-
-            # ---- extract + dedup + seen anti-join + robots (skip at last depth, F4)
-            n_candidates = n_new = n_blocked = 0
-            new_rows = None
-            if d + 1 < depth_limit and n_admitted > 0:
-                # extraction parallelism must not be bound to the frontier's
-                # file count — pin it to 2× cores (CPU-bound Python stage;
-                # finer tasks smooth stragglers)
-                extract_input = admitted_keyed.repartition(2 * self.spark.sparkContext.defaultParallelism)
-                links = extract_links(extract_input, self.spec)
-                keyed = self._with_keys(links.select("url", "host"))
-                if self.cfg.robots is not None:
-                    # blocked URLs never enter the seen set, so the robots filter
-                    # commutes with both dedup stages; counting BEFORE the
-                    # within-round dedup is multiplicity-preserving — every
-                    # discovery occurrence of a blocked URL counts, matching the
-                    # oracle (oracle/crawler.py:141-147) at any depth, not just
-                    # where the fixture happens to have no within-round dups.
-                    # The count is metrics-only, so it is gated like n_candidates
-                    # (-1 when detailed metrics are off — no extra job per round)
-                    keyed = keyed.withColumn("_blocked", blocked_expr(F.col("url"))).persist()
-                    persisted.append(keyed)
-                    n_blocked = keyed.filter(F.col("_blocked")).count() if self.cfg.detailed_metrics else -1
-                    keyed = keyed.filter(~F.col("_blocked")).drop("_blocked")
-                # U3 within-round dedup fused with the U2 cross-depth probe —
-                # one exchange for both (see _filter_new); `deduped` is the
-                # distinct candidate view for metrics
-                fresh, deduped = self._filter_new(store, keyed, persisted)
-                n_candidates = deduped.count() if self.cfg.detailed_metrics else -1
-                new_rows = fresh.withColumn("depth", F.lit(d + 1)).select(
-                    "url", "host", "url_hash", "seen_bucket", "depth"
-                )
-
-            # ---- stage writes into the round dir (visible only after commit):
-            # ONE fused shuffle+write job for the new URLs (parquet + seen delta
-            # + bloom blobs all from the same pass, counts from its stats — no
-            # read-back), a second ONLY at sub-round 0 when politeness scheduled
-            # future slices (written once, partitioned by due sub-round), and NO
-            # next-frontier rewrite: untouched depths AND not-yet-due slices
-            # carry over in the manifest by reference
-            t = _mark("extract_dedup_ms", t)
-            deferred_future = (
-                _pool_submit(
-                    self.spark,
-                    self._write_bucketed, store, store.deferred_path(r), deferred_sched, None, "due",
-                    n_deferred,
-                    group=f"defwrite:{store.dir}:r{r}",
-                )
-                if n_deferred > 0
-                else None
-            )
-            touched: List[int] = []
-            n_new = 0
-            if new_rows is not None:
-                # upper bound on the write's row count (new <= candidates <=
-                # admitted × max out-degree): over-estimating only shrinks the
-                # chunked groups, never breaks the memory guard
-                stats, write_task_ms = self._write_bucketed(
-                    store, store.new_path(r), new_rows, bloom_round=r,
-                    approx_rows=n_admitted * C.MAX_OUT_DEGREE,
-                )
-                touched = sorted({s[0] for s in stats})
-                n_new = sum(s[1] for s in stats)
-                # worker-side breakdown of THIS write job (summed across its
-                # tasks): lets the bench attribute writes_ms to Arrow
-                # conversion / parquet encode / bloom fold vs shuffle+sched.
-                # Returned with the stats (not an instance attribute) so the
-                # concurrent deferred-slice write can't clobber it.
-                for k, v in write_task_ms.items():
-                    phases[f"write_{k}"] = v
-            sched_entries: List[list] = []
-            if deferred_future is not None:
-                def_stats, _ = deferred_future.result()
-                n_def_written = sum(s[2] for s in def_stats)
-                # self-check: the manifest records arithmetic (pending - admitted);
-                # the write stats come back for free — any divergence (e.g. a
-                # future budget expression breaking admit/schedule complementarity)
-                # must fail loudly, not corrupt n_pending_after / the done flag
-                if n_def_written != n_deferred:
-                    raise AssertionError(
-                        f"deferred write produced {n_def_written} rows, expected {n_deferred}"
-                    )
-                per_due: dict = {}
-                for due, _b, n in def_stats:
-                    per_due[due] = per_due.get(due, 0) + n
-                root = store.deferred_path(r)
-                sched_entries = [
-                    [self._rel(store, os.path.join(root, f"due={due}")), d, per_due[due], due]
-                    for due in sorted(per_due)
-                ]
-            payload_stats = None
-            if self.cfg.pipeline_verify:
-                # this round's verify keeps running through the NEXT round's
-                # compute; await the PREVIOUS round's instead (it has had a full
-                # round of overlap), so per-round wall is max(verify, rest),
-                # not their sum. This round's persisted frames stay alive until
-                # its verify finalizes.
-                t = _mark("writes_ms", t)
-                self._finalize_verify(store)
-                if payload_future is None:
-                    for df_ in persisted:
-                        df_.unpersist()
-                _mark("fetch_verify_wait_ms", t)
-            else:
-                for df_ in persisted:
-                    df_.unpersist()
-                t = _mark("writes_ms", t)
-                payload_stats = payload_future.result() if payload_future is not None else None
-                _mark("fetch_verify_wait_ms", t)
-
-            consumed_ids = {id(e) for e in consumed}
-            next_manifest = [e for e in manifest if id(e) not in consumed_ids]
-            next_manifest.extend(sched_entries)
-            if n_new > 0:
-                next_manifest.append([self._rel(store, store.new_path(r)), d + 1, n_new, 0])
-            next_manifest = self._compact_manifest(store, r, next_manifest, phases)
-            n_pending_after = sum(e[2] for e in next_manifest)
-
-            info = {
-                "depth": int(d),
-                "sub_round": int(sub),
-                "depth_limit": depth_limit,
-                "n_admitted": n_admitted,
-                "n_new": n_new,
-                "n_pending_after": n_pending_after,
-                "frontier_manifest": next_manifest,
-                "done": n_pending_after == 0,
-            }
-            if payload_stats:
-                info["payload"] = {k: (float(v) if v is not None else None) for k, v in payload_stats.items()}
-            info["phases"] = phases
-            store.commit_round(r, info, touched_blooms=touched)
-            if self.cfg.pipeline_verify and payload_future is not None:
-                # stash AFTER commit: the finalize (next round / job end) writes
-                # the stats sidecar into this round's already-committed dir
-                self._verify_inflight = (store, r, payload_future, persisted)
-            if (
-                self.cfg.pipeline_verify
-                and self.cfg.verify_payloads
-                and self.cfg.politeness is None
-                and n_new > 0
-                and not info["done"]
-                and d + 2 >= depth_limit
-                and all(e[1] == d + 1 for e in next_manifest)
-            ):
-                # EARLY-SUBMIT the NEXT (final-depth) round's verify over the
-                # rows just committed (r8 verdict Next #2): the final round
-                # does no extraction, so its verify — the job's largest —
-                # used to start only at that round's head and finalize with
-                # nothing to hide behind but the job-end seen count. With
-                # politeness off the next round admits EXACTLY this
-                # manifest (one depth, sub-round 0), so the verify input —
-                # re-read from the committed files, like the next round
-                # will — is row-identical and the stats sidecar unchanged.
-                nxt = self._read_components(
-                    [os.path.join(store.dir, e[0]) for e in next_manifest]
-                )
-                nxt_keyed = nxt.withColumn(
-                    "image_id", U.image_id_of(F.col("url"))
-                ).withColumn(
-                    "corpus_bucket",
-                    F.pmod(U.page_index(F.col("url")), F.lit(C.N_BUCKETS)).cast("int"),
-                )
-                t0e = time.monotonic()
-
-                def _early():
-                    stats = self._verify_stats(nxt_keyed)
-                    stats["verify_wall_ms"] = round((time.monotonic() - t0e) * 1000)
-                    return stats
-
-                self._early_verify = (
-                    store,
-                    r + 1,
-                    _pool_submit(self.spark, _early, group=f"verify:{store.dir}:r{r + 1}"),
-                )
-            return RoundStats(
-                round=r,
-                depth=int(d),
-                sub_round=int(sub),
-                n_admitted=n_admitted,
-                n_candidates=n_candidates,
-                n_new=n_new,
-                n_blocked=n_blocked,
-                n_pending_after=n_pending_after,
-                wall_ms=0,
-            )
+                futures.append(verify)
+            mark("fetch_submit_ms")
+            new_rows, n_candidates, n_blocked = self._discover(store, adm, depth_limit, persisted)
+            mark("extract_dedup_ms")
+            writes = self._stage_writes(store, r, adm, new_rows, phases, futures)
+            for df_ in persisted:
+                df_.unpersist()
+            mark("writes_ms")
+            payload = verify.result() if verify is not None else None
+            mark("fetch_verify_wait_ms")
+            n_pending_after = self._commit(store, r, adm, depth_limit, writes, payload, phases)
         except BaseException:
-            # a mid-round failure must not leak this round's in-flight
-            # concurrent jobs or cached frames: the verify/deferred futures
-            # would otherwise run unobserved (and their persisted inputs
-            # stay pinned forever — _verify_inflight is only stashed on the
-            # success path, AFTER commit). CANCEL their Spark jobs first —
-            # the verify is the round's longest job and an interrupt
-            # (Ctrl-C, timeout) must not block its own cleanup behind a
-            # full verify run — then drain, release, re-raise; the futures'
-            # own outcomes are moot once the round failed.
-            # r-1's group too: with pipeline_verify the longest wait in the
-            # round is _finalize_verify awaiting the PREVIOUS round's verify
-            # — an interrupt usually lands exactly there, and that job would
-            # otherwise keep running unobserved after its input frames were
-            # unpersisted by finalize's cleanup
-            for g in (
-                f"verify:{store.dir}:r{r}",
-                f"defwrite:{store.dir}:r{r}",
-                f"verify:{store.dir}:r{r - 1}",
-                f"verify:{store.dir}:r{r + 1}",  # an early-submitted next-round verify
-            ):
+            # a failed round must not leak its in-flight pool actions or
+            # cached frames. CANCEL their Spark jobs first — the verify is
+            # the round's longest job and an interrupt (Ctrl-C, timeout)
+            # must not block its own cleanup behind a full verify run —
+            # then drain, release and re-raise; the futures' own outcomes
+            # are moot once the round failed.
+            for g in ("verify", "defwrite"):
                 try:
-                    self.spark.sparkContext.cancelJobGroup(g)
+                    self.spark.sparkContext.cancelJobGroup(f"{g}:{store.dir}:r{r}")
                 except Exception:  # pragma: no cover - cancellation is best-effort
                     pass
-            early_fut = self._early_verify[2] if self._early_verify is not None else None
-            self._early_verify = None
-            for fut in (payload_future, deferred_future, early_fut):
-                if fut is not None:
-                    try:
-                        fut.result()
-                    except Exception:
-                        pass
+            for fut in futures:
+                try:
+                    fut.result()
+                except Exception:
+                    pass
             for df_ in persisted:
                 try:
                     df_.unpersist()
                 except Exception:
                     pass
             raise
+        return RoundStats(
+            round=r,
+            depth=adm.depth,
+            sub_round=adm.sub_round,
+            n_admitted=adm.n,
+            n_candidates=n_candidates,
+            n_new=writes.n_new,
+            n_blocked=n_blocked,
+            n_pending_after=n_pending_after,
+            wall_ms=0,
+        )
+
+    def _admit(self, store: JobStateStore, r: int, persisted: List[DataFrame]) -> _Admission:
+        """Admission stage of round r. The pending frontier is a MANIFEST
+        of committed file-sets ([relpath, depth, n_rows, due_sub]); the
+        depth cursor, the no-politeness admitted count and every later
+        sub-round's admitted count are manifest arithmetic — zero Spark
+        jobs — and only the file-sets the round drains are opened.
+
+        Sub-round 0 ranks the depth's ENTIRE pending set once and hands
+        back the rows due in later sub-rounds (`ceil(rn/budget)-1`) for a
+        single partitioned write; every later sub-round admits its slice
+        purely BY MANIFEST REFERENCE — no politeness window re-run, no
+        deferred-set rewrite, so a mega-host with M pending and budget k
+        writes O(M) rows in total, not O(M²/k). Every frame this caches is
+        appended to `persisted`."""
+        prev = store.read_commit(r - 1)
+        manifest = prev.get("frontier_manifest")
+        if manifest is None:
+            raise ValueError(
+                f"job store at {store.dir!r} was committed by a pre-manifest layout "
+                "(no frontier_manifest in commit.json); rerun the job in a fresh "
+                "warehouse — old stores are not migrated"
+            )
+        d = min(e[1] for e in manifest)
+        sub = prev["sub_round"] + 1 if prev["depth"] == d else 0
+        entries_d = [e for e in manifest if e[1] == d]
+        if sub == 0:
+            consumed = entries_d
+        else:
+            consumed = [e for e in entries_d if len(e) > 3 and e[3] == sub]
+            if not consumed:
+                raise ValueError(
+                    f"no frontier slice due at depth {d} sub-round {sub}: "
+                    f"schedule slices must be contiguous ({entries_d}). A "
+                    "3-element entry here means the store was committed by "
+                    "the pre-due-slice layout — rerun the job in a fresh "
+                    "warehouse (old stores are not migrated)."
+                )
+        admitted = self._read_components([os.path.join(store.dir, e[0]) for e in consumed])
+        n = sum(e[2] for e in consumed)
+        deferred, n_deferred = None, 0
+        if sub == 0 and self.cfg.politeness is not None:
+            # `schedule` persists its `ranked` ancestor: the host-window
+            # shuffle runs ONCE, shared by the admitted count and the
+            # deferred write
+            admitted, deferred = schedule(
+                admitted, self.cfg.politeness, persisted, grade=self._grade_col()
+            )
+        admitted = admitted.persist()
+        persisted.append(admitted)
+        if deferred is not None:
+            n_pending, n = n, admitted.count()
+            n_deferred = n_pending - n
+        return _Admission(int(d), int(sub), manifest, consumed, admitted, n, deferred, n_deferred)
+
+    def _discover(
+        self, store: JobStateStore, adm: _Admission, depth_limit: int, persisted: List[DataFrame]
+    ) -> tuple:
+        """Discover stage: extract the admitted pages' links, drop and count
+        robots-blocked ones, and keep the never-seen rest (within-round
+        dedup fused with the seen probe, see _filter_new). Returns
+        (new_rows, n_candidates, n_blocked); new_rows is None when nothing
+        was admitted or at the last depth, whose links are discarded (F4)."""
+        if adm.depth + 1 >= depth_limit or adm.n == 0:
+            return None, 0, 0
+        # extraction parallelism must not be bound to the frontier's file
+        # count — pin it to 2× cores (CPU-bound Python stage; finer tasks
+        # smooth stragglers)
+        n_par = 2 * self.spark.sparkContext.defaultParallelism
+        links = extract_links(adm.frame.select("url").repartition(n_par), self.spec)
+        keyed = self._with_keys(links.select("url", "host"))
+        n_blocked = 0
+        if self.cfg.robots is not None:
+            # blocked URLs never enter the seen set, so the robots filter
+            # commutes with both dedup stages; counting BEFORE the
+            # within-round dedup is multiplicity-preserving — every
+            # discovery occurrence of a blocked URL counts, matching the
+            # oracle (oracle/crawler.py) at any depth
+            keyed = keyed.withColumn("_blocked", blocked_expr(F.col("url"))).persist()
+            persisted.append(keyed)
+            n_blocked = keyed.filter(F.col("_blocked")).count()
+            keyed = keyed.filter(~F.col("_blocked")).drop("_blocked")
+        fresh, deduped = self._filter_new(store, keyed, persisted)
+        new_rows = fresh.withColumn("depth", F.lit(adm.depth + 1)).select(
+            "url", "host", "url_hash", "seen_bucket", "depth"
+        )
+        return new_rows, deduped.count(), n_blocked
+
+    def _stage_writes(
+        self, store: JobStateStore, r: int, adm: _Admission, new_rows: Optional[DataFrame],
+        phases: dict, futures: list,
+    ) -> _Writes:
+        """Write stage: stage the round's files in its dir (visible only
+        after commit). ONE fused shuffle+write job for the new URLs
+        (parquet + seen delta + Bloom blobs from the same pass, counts from
+        its stats — no read-back) and, at a sub-round 0 where politeness
+        deferred rows, a concurrent write of the future slices partitioned
+        by due sub-round (its future goes onto `futures`). Nothing else is
+        rewritten: untouched depths and not-yet-due slices carry over in
+        the manifest by reference."""
+        deferred = None
+        if adm.n_deferred > 0:
+            deferred = _pool_submit(
+                self.spark,
+                self._write_bucketed, store, store.deferred_path(r), adm.deferred, None, "due",
+                adm.n_deferred,
+                group=f"defwrite:{store.dir}:r{r}",
+            )
+            futures.append(deferred)
+        touched: List[int] = []
+        n_new = 0
+        if new_rows is not None:
+            # upper bound on the write's row count (new <= candidates <=
+            # admitted × max out-degree): over-estimating only shrinks the
+            # chunked groups, never breaks the memory guard
+            stats, write_task_ms = self._write_bucketed(
+                store, store.new_path(r), new_rows, bloom_round=r,
+                approx_rows=adm.n * C.MAX_OUT_DEGREE,
+            )
+            touched = sorted({s[0] for s in stats})
+            n_new = sum(s[1] for s in stats)
+            # worker-side breakdown of THIS write job (summed across its
+            # tasks): Arrow conversion / parquet encode / bloom fold vs
+            # shuffle+sched. Returned with the stats, so the concurrent
+            # deferred-slice write can't clobber it.
+            for k, v in write_task_ms.items():
+                phases[f"write_{k}"] = v
+        slices: List[list] = []
+        if deferred is not None:
+            def_stats, _ = deferred.result()
+            n_def_written = sum(s[2] for s in def_stats)
+            # self-check: the manifest records arithmetic (pending - admitted);
+            # any divergence (e.g. a budget expression breaking
+            # admit/schedule complementarity) must fail loudly, not corrupt
+            # n_pending_after / the done flag
+            if n_def_written != adm.n_deferred:
+                raise AssertionError(
+                    f"deferred write produced {n_def_written} rows, expected {adm.n_deferred}"
+                )
+            per_due: dict = {}
+            for due, _b, n in def_stats:
+                per_due[due] = per_due.get(due, 0) + n
+            root = store.deferred_path(r)
+            slices = [
+                [self._rel(store, os.path.join(root, f"due={due}")), adm.depth, per_due[due], due]
+                for due in sorted(per_due)
+            ]
+        return _Writes(touched, n_new, slices)
+
+    def _commit(
+        self, store: JobStateStore, r: int, adm: _Admission, depth_limit: int,
+        writes: _Writes, payload: Optional[dict], phases: dict,
+    ) -> int:
+        """Commit stage: the next manifest is the previous one minus the
+        consumed entries plus this round's slices and new/ set (manifest
+        arithmetic, no Spark job), bounded by _compact_manifest; then one
+        atomic commit_round carrying the payload stats and phase marks.
+        Returns n_pending_after."""
+        consumed_ids = {id(e) for e in adm.consumed}
+        manifest = [e for e in adm.manifest if id(e) not in consumed_ids] + writes.slices
+        if writes.n_new > 0:
+            manifest.append([self._rel(store, store.new_path(r)), adm.depth + 1, writes.n_new, 0])
+        manifest = self._compact_manifest(store, r, manifest, phases)
+        n_pending_after = sum(e[2] for e in manifest)
+        info = {
+            "depth": adm.depth,
+            "sub_round": adm.sub_round,
+            "depth_limit": depth_limit,
+            "n_admitted": adm.n,
+            "n_new": writes.n_new,
+            "n_pending_after": n_pending_after,
+            "frontier_manifest": manifest,
+            "done": n_pending_after == 0,
+        }
+        if payload:
+            info["payload"] = {k: (float(v) if v is not None else None) for k, v in payload.items()}
+        info["phases"] = phases
+        store.commit_round(r, info, touched_blooms=writes.touched)
+        return n_pending_after
 
     def _write_round_metrics(self, store: JobStateStore, r: int, s: RoundStats) -> None:
         """Per-round lineage/metrics row (north rule; generalizes the

@@ -12,6 +12,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """24g, capped at half the machine's memory (MemTotal in /proc/meminfo)
+    so the driver heap cannot outgrow a small box."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "24g"
+    return f"{min(24 * 1024, kb // 2048)}m"
+
+
 def get_spark(
     app: str = "frontier-engine",
     cores: int | None = None,
@@ -31,7 +42,7 @@ def get_spark(
         "NUMEXPR_NUM_THREADS",
     ):
         os.environ.setdefault(var, "1")
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     b = (
         SparkSession.builder.master(f"local[{cores}]")
@@ -50,11 +61,12 @@ def get_spark(
         # 2048 keeps numpy fully vectorized with ~5% of the working set.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         # FAIR job scheduling: the engine deliberately runs independent job
-        # DAGs concurrently (pipelined payload verify ∥ next round's
-        # extract ∥ fused write — plans/frontier._POOL). Under the default
-        # FIFO scheduler the long verify job's stages hold every task slot
-        # and the short write job queues behind them (measured: writes_ms
-        # 10.6 s at local[32] vs 2.0 s at local[8] in scaling attempt 16).
+        # DAGs concurrently within a round (payload verify ∥ extract, dedup
+        # and fused write; deferred-slice write ∥ new-URL write —
+        # plans/frontier._POOL). Under the default FIFO scheduler the long
+        # verify job's stages hold every task slot and the short write job
+        # queues behind them (measured: writes_ms 10.6 s at local[32] vs
+        # 2.0 s at local[8] in scaling attempt 16).
         # NOTE this flag alone is NOT enough: FAIR arbitrates BETWEEN
         # pools, and with no allocation file every job lands in the one
         # default pool whose internal mode is FIFO — so each concurrent
@@ -64,7 +76,7 @@ def get_spark(
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.sql.files.maxPartitionBytes", "128m")
     )
     # RAM-backed shuffle dirs: in single-box local mode every "executor"

@@ -81,6 +81,13 @@ def main():
         ts = pr.agg(
             F.percentile_approx("rank", [i / 8.0 for i in range(1, 8)], 10000).alias("t")
         ).collect()[0]["t"]
+        if ts is None or any(t is None for t in ts):
+            raise ValueError(
+                f"octile thresholds {ts!r}: the pagerank frame is empty, so "
+                "there is nothing to grade"
+            )
+        # tied thresholds (many equal ranks) merge grade buckets: a tie
+        # skips grades, so fewer than 8 distinct grades come out
         grade = sum((F.col("rank") >= F.lit(float(t))).cast("int") for t in ts)
         pr.select("url", grade.alias("grade")).write.format("noop").mode("overwrite").save()
         t2 = time.monotonic()

@@ -86,9 +86,8 @@ def main():
         a, b = p8.get(k, 0) / 1000, p32.get(k, 0) / 1000
         speedup = a / b if b else float("inf")
         phase_rows.append(f"| {k} | {a:.1f} | {b:.1f} | {speedup:.2f}× | {speedup/4:.2f} |")
-    # bench.py runs the drain with pipeline_verify: round r's decode+verify
-    # overlaps round r+1's compute, so fetch_verify_wait_ms is residual wait
-    # (~0 when the overlap fully hides it) and phases no longer sum to wall.
+    # payload decode+verify runs inside its round beside the extract/write
+    # jobs, so fetch_verify_wait_ms is the verify time left after them.
     # Since r7 the extract→probe→write pipeline executes as ONE fused Spark
     # job whose wall lands in writes_ms (extract_dedup_ms is plan
     # construction only) — that fused job is the representative compute
@@ -150,9 +149,9 @@ Spark job since r7 — its wall lands in `writes_ms`; the filter-positive
 exact re-check runs inside the probe task, so no per-round anti-join or
 separate seen scan remains) speeds up {extract_speedup:.2f}× with 4×
 cores, and payload decode+verify (the heaviest real work at the 10^10
-target) is PIPELINED across rounds since r4: round r's verify overlaps
-round r+1's compute, so its phase row shows residual wait (~0 when fully
-hidden) and the per-phase rows no longer sum to wall clock. What does not
+target) runs inside its round beside that job, so its phase row
+(`fetch_verify_wait_ms`) shows only the verify time left once the writes
+finish. What does not
 scale in this sandbox is what a single box shares: the Arrow-batched
 decode/verify kernel is memory-bandwidth-bound across 32 sibling
 processes on one socket, so as the fused job shrinks with cores the

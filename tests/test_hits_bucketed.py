@@ -86,3 +86,28 @@ def test_hits_on_tables_matches_flat(spark, tmp_path):
     # integer-exact iteration + identical normalization divisors ⇒ equal
     # BITS, not approximately equal
     assert flat == buck
+
+
+def test_failed_iteration_releases_caches(spark, tmp_path, monkeypatch):
+    """A failure inside the HITS iteration must not pin the edge or node
+    caches of either entry point (flat and dual-bucketed tables)."""
+    import pytest
+
+    from distributed_web_crawler_spark.operators import hits as H
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("iteration failed")
+
+    edges = _edges(spark)
+    write_edges_dual_bucketed(edges, "hits_fail", n_buckets=N_BUCKETS, base_path=str(tmp_path / "t3"))
+    monkeypatch.setattr(H, "_iterate", boom)
+    try:
+        before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+        with pytest.raises(RuntimeError, match="iteration failed"):
+            hits(edges)
+        with pytest.raises(RuntimeError, match="iteration failed"):
+            hits_on_tables(spark, "hits_fail")
+        assert not (set(spark.sparkContext._jsc.getPersistentRDDs().keys()) - before)
+    finally:
+        spark.sql("DROP TABLE IF EXISTS hits_fail_src")
+        spark.sql("DROP TABLE IF EXISTS hits_fail_dst")

@@ -92,3 +92,27 @@ def test_iteration_scores_absent_sources_at_base(spark):
     with pytest.raises(ValueError, match="n_iters"):
         pagerank(edges, n_iters=0)
     assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) == before
+
+
+def test_failed_iteration_releases_caches(spark, tmp_path, monkeypatch):
+    """A failure inside the power iteration must not pin the edge, weight
+    or node caches of either entry point (flat and bucketed-table)."""
+    import pytest
+
+    from distributed_web_crawler_spark.operators import pagerank as PR
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("iteration failed")
+
+    edges = spark.createDataFrame([("a", "b"), ("b", "c"), ("c", "a")], "src string, dst string")
+    PR.write_edges_bucketed(edges, "pr_fail", n_buckets=2, path=str(tmp_path / "pr_fail"))
+    monkeypatch.setattr(PR, "_power_iterate", boom)
+    try:
+        before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+        with pytest.raises(RuntimeError, match="iteration failed"):
+            PR.pagerank(edges)
+        with pytest.raises(RuntimeError, match="iteration failed"):
+            PR.pagerank_on_table(spark, "pr_fail")
+        assert not (set(spark.sparkContext._jsc.getPersistentRDDs().keys()) - before)
+    finally:
+        spark.sql("DROP TABLE IF EXISTS pr_fail")
